@@ -33,6 +33,47 @@ def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
 
 
+def regression_gate(side: str, timings: dict, sf: str,
+                    n_runs: int) -> dict:
+    """Round-over-round regression gate (VERDICT r04 #1): diff this
+    run's per-query medians against the previous round's side file
+    (the committed BENCH/bench_queries.json) before it is overwritten.
+
+    A "regression" is a shared query whose new median exceeds the old
+    by BOTH >1.0s absolute (the documented cross-session noise bound)
+    AND >1.4x relative, so drift can't ship silently; returns the top-5
+    as {name: [prev, new]}. Medians from a different ``sf`` or
+    ``runs_per_query`` are not comparable, so a config mismatch skips
+    the gate with a log line naming both configs.
+    """
+    try:
+        with open(side) as fh:
+            prior = json.load(fh)
+    except (OSError, ValueError) as exc:
+        log(f"regression gate skipped (no prior side file): {exc}")
+        return {}
+    prior_cfg = {"sf": prior.get("sf"),
+                 "runs_per_query": prior.get("runs_per_query")}
+    cfg = {"sf": sf, "runs_per_query": n_runs}
+    if prior_cfg != cfg:
+        log(f"regression gate skipped (config mismatch): prior "
+            f"{prior_cfg} vs current {cfg}")
+        return {}
+    prev = prior.get("queries", {})
+    deltas = sorted(
+        ((n, prev[n], t) for n, t in timings.items()
+         if t > 0 and prev.get(n, 0) > 0
+         and t - prev[n] > 1.0 and t / prev[n] > 1.4),
+        key=lambda r: -(r[2] - r[1]))
+    regressions = {n: [p, t] for n, p, t in deltas[:5]}
+    for n, (p, t) in regressions.items():
+        log(f"REGRESSION vs prev round: {n} {p}s -> {t}s")
+    if not regressions:
+        log(f"regression gate: no query regressed vs previous medians "
+            f"({len(prev)} prior entries)")
+    return regressions
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -93,42 +134,6 @@ def main() -> int:
     log(f"extraction full-chain median: {full_sec:.1f}s "
         f"({n_docs / full_sec:.0f} docs/s; "
         f"runs {[round(r, 1) for r in full_runs]})")
-
-    # --- JVM text lane vs Python fused lane (Q9 promotion evidence) -----
-    from pyspark.sql import functions as F
-
-    from pdf_extractor_spark.pipeline.extract import extract_pages_text_jvm
-    n_text = n_docs * 25  # text rows are ~100× cheaper; widen the window
-    text_path = f"/tmp/bench_textpages_{n_text}"
-    if not os.path.exists(text_path):
-        log(f"materializing {n_text} text-only pages → {text_path}")
-        (synth_pages_df(spark, n=n_text)
-         .withColumn("text", F.coalesce(
-             "text", F.concat_ws(" ", F.lit(
-                 "Pre extracted body. Next sentence here."), "url")))
-         .withColumn("html", F.lit(None).cast("binary"))
-         .write.mode("overwrite").parquet(text_path))
-    text_pages = spark.read.parquet(text_path)
-    lane = {}
-    from pdf_extractor_spark.pipeline.extract import \
-        extract_pages_lines_jvm
-    for name, fn in (("python", lambda: extract_pages(
-                        text_pages, levels=("raw",))),
-                     ("jvm", lambda: extract_pages_text_jvm(text_pages)),
-                     ("lines_python", lambda: extract_pages(
-                         text_pages, levels=("raw", "lines"))),
-                     ("lines_jvm", lambda: extract_pages_lines_jvm(
-                         text_pages))):
-        fn().filter("failure_reason is null").count()  # warm
-        t0 = time.time()
-        fn().filter("failure_reason is null").count()
-        lane[name] = round(time.time() - t0, 3)
-    log(f"text lane: python {lane['python']}s vs jvm {lane['jvm']}s "
-        f"({lane['python'] / max(lane['jvm'], 1e-9):.1f}x) on "
-        f"{n_text} text rows")
-    log(f"lines lane: python {lane['lines_python']}s vs jvm "
-        f"{lane['lines_jvm']}s "
-        f"({lane['lines_python'] / max(lane['lines_jvm'], 1e-9):.1f}x)")
 
     # --- protocol headline: BASELINE.md freezes "row count sized so the
     # local[32] run takes >=60s" (VERDICT r04 #2 — the 16k quick window
@@ -200,29 +205,7 @@ def main() -> int:
                         "BENCH", "bench_queries.json")
     os.makedirs(os.path.dirname(side), exist_ok=True)
 
-    # Round-over-round regression gate (VERDICT r04 #1): before this run
-    # overwrites the side file, diff against the previous round's medians
-    # (the committed BENCH/bench_queries.json). A "regression" is a shared
-    # query whose new median exceeds the old by BOTH >1.0s absolute (the
-    # documented cross-session noise bound) AND >1.4x relative, so drift
-    # can't ship silently; the top-5 ride the parsed final line.
-    regressions = {}
-    try:
-        with open(side) as fh:
-            prev = json.load(fh).get("queries", {})
-        deltas = sorted(
-            ((n, prev[n], t) for n, t in timings.items()
-             if t > 0 and prev.get(n, 0) > 0
-             and t - prev[n] > 1.0 and t / prev[n] > 1.4),
-            key=lambda r: -(r[2] - r[1]))
-        regressions = {n: [p, t] for n, p, t in deltas[:5]}
-        for n, (p, t) in regressions.items():
-            log(f"REGRESSION vs prev round: {n} {p}s -> {t}s")
-        if not regressions:
-            log(f"regression gate: no query regressed vs previous medians "
-                f"({len(prev)} prior entries)")
-    except (OSError, ValueError) as exc:
-        log(f"regression gate skipped (no prior side file): {exc}")
+    regressions = regression_gate(side, timings, sf, n_runs)
 
     with open(side, "w") as fh:
         json.dump({"sf": sf, "runs_per_query": n_runs,
@@ -247,10 +230,6 @@ def main() -> int:
             "ok": ok,
             "full_chain_sec": round(full_sec, 3),
             "full_chain_docs_per_sec": round(n_docs / full_sec, 1),
-            "text_lane_python_sec": lane["python"],
-            "text_lane_jvm_sec": lane["jvm"],
-            "lines_lane_python_sec": lane["lines_python"],
-            "lines_lane_jvm_sec": lane["lines_jvm"],
         },
     }
     line = json.dumps(result)

@@ -46,8 +46,7 @@ def _spark(cpus: int | None):
 def cmd_extract(args) -> int:
     from pyspark.sql import functions as F
 
-    from .pipeline.extract import (extract_pages, extract_pages_hybrid,
-                                   repartition_salted)
+    from .pipeline.extract import extract_pages, repartition_salted
 
     spark = _spark(args.cpus)
     if getattr(args, "input_format", "parquet") == "warc":
@@ -57,14 +56,7 @@ def cmd_extract(args) -> int:
         pages = spark.read.parquet(args.input)
     if args.partitions:
         pages = repartition_salted(pages, args.partitions)
-    levels = tuple(args.levels.split(","))
-    if args.jvm_text_lane and levels == ("raw",):
-        out = extract_pages_hybrid(pages)
-    elif args.jvm_text_lane and set(levels) == {"raw", "lines"}:
-        from .pipeline.extract import extract_pages_lines_hybrid
-        out = extract_pages_lines_hybrid(pages)
-    else:
-        out = extract_pages(pages, levels=levels)
+    out = extract_pages(pages, levels=tuple(args.levels.split(",")))
     if getattr(args, "with_quality", False):
         # gopher signals + verdict as pure projections appended to the
         # SAME extraction scan — no second pass over the corpus
@@ -429,10 +421,6 @@ def main(argv=None) -> int:
                         "crawl container files")
     p.add_argument("--levels", default="raw")
     p.add_argument("--partitions", type=int, default=0)
-    p.add_argument("--jvm-text-lane", action="store_true",
-                   help="raw or raw,lines levels: route payload-less "
-                        "rows through the pure-JVM expression lane "
-                        "(lines level emits typed lines/stats columns)")
     p.add_argument("--cpus", type=int, default=None)
     p.set_defaults(fn=cmd_extract)
 

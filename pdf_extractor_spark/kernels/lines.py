@@ -80,86 +80,3 @@ def process_lines(text: str) -> Dict:
     """``LineProcessor.process`` equivalent: lines + stats envelope."""
     lines = split_lines(text)
     return {"lines": lines, "stats": line_stats(lines)}
-
-
-# --- Q9 promotion: the JVM twin of split_lines/line_stats (P2+P3+A1) -------
-#
-# Same rule as textnorm's twin (VERDICT r03 #7): pure JVM expressions,
-# promoted ONLY behind a value-identity gate vs the Python kernel
-# (tests/test_jvm_lines.py — synth corpus + adversarial unicode + the
-# whitespace codepoint sweep + >MAX_LINE_LENGTH sentence packing).
-#
-# P3's greedy sentence packing relies on a post-clean invariant: after
-# clean_line every whitespace run is a single ' ', so Python's
-# ``([.!?])\s+`` split is exactly a split at ``(?<=[.!?]) `` — the
-# lookbehind keeps the punctuation inside the unit, which is precisely
-# the ``sent + punct`` the Python kernel accumulates. The greedy
-# packing itself (the +1 space allowance while filling,
-# flush-on-overflow, no +1 on the overflow seed) is an ``aggregate``
-# fold with struct(out, buf, blen) state; blen = 0 iff the buffer is
-# empty (every unit is non-empty, and any append sets blen >= 1).
-
-def _pack_long_line_expr(l):
-    """P3 fold over one over-long cleaned line (a lambda Column)."""
-    from pyspark.sql import functions as F
-
-    units = F.split(l, "(?<=[.!?]) ", -1)
-    init = F.expr("struct(cast(array() as array<string>) as out, "
-                  "'' as buf, cast(0 as bigint) as blen)")
-
-    def step(s, u):
-        fits = (s["blen"] + F.length(u) + 1) <= MAX_LINE_LENGTH
-        return F.when(fits, F.struct(
-            s["out"].alias("out"),
-            F.when(s["blen"] == 0, u)
-             .otherwise(F.concat(s["buf"], F.lit(" "), u)).alias("buf"),
-            (s["blen"] + F.length(u) + 1).alias("blen"),
-        )).otherwise(F.struct(
-            F.when(s["blen"] == 0, s["out"])
-             .otherwise(F.array_append(s["out"], s["buf"])).alias("out"),
-            u.alias("buf"),
-            F.length(u).cast("bigint").alias("blen"),
-        ))
-
-    def fin(s):
-        return F.when(s["blen"] == 0, s["out"]) \
-                .otherwise(F.array_append(s["out"], s["buf"]))
-
-    return F.aggregate(units, init, step, fin)
-
-
-def split_lines_expr(col):
-    """P2+P3 as a JVM expression: text column → array<string> of
-    cleaned lines, value-identical to :func:`split_lines`."""
-    from pyspark.sql import functions as F
-
-    from .textnorm import _PY_WS_CLASS as WS
-
-    cleaned = F.transform(
-        F.split(col, "\n", -1),
-        lambda l: F.btrim(F.regexp_replace(l, f"{WS}+", " "),
-                          F.lit(" ")))
-    nonempty = F.filter(cleaned, lambda l: l != F.lit(""))
-    return F.flatten(F.transform(
-        nonempty,
-        lambda l: F.when(F.length(l) <= MAX_LINE_LENGTH, F.array(l))
-                   .otherwise(_pack_long_line_expr(l))))
-
-
-def line_stats_exprs(lines_col):
-    """A1 as JVM expressions over a lines array column: returns the
-    (total_lines, avg_line_length, max_line_length) Columns. avg is
-    the same IEEE-754 double division the Python kernel performs
-    (sum of int lengths / int count), so values match bit-for-bit;
-    an empty array yields (0, 0.0, 0) like the kernel's defaults."""
-    from pyspark.sql import functions as F
-
-    n = F.size(lines_col).cast("long")
-    lens = F.transform(lines_col, lambda l: F.length(l).cast("bigint"))
-    total_len = F.aggregate(lens, F.lit(0).cast("bigint"),
-                            lambda a, x: a + x)
-    avg = F.when(n > 0, total_len.cast("double") / n.cast("double")) \
-           .otherwise(F.lit(0.0))
-    mx = F.coalesce(F.array_max(lens), F.lit(0).cast("bigint"))
-    return (n.alias("total_lines"), avg.alias("avg_line_length"),
-            mx.alias("max_line_length"))

@@ -39,45 +39,6 @@ def normalize_raw_text(text: str) -> str:
     return "\n".join(ln for ln in stripped if ln)
 
 
-# --- Q9 promotion: the JVM twin of normalize_raw_text ----------------------
-#
-# Python's ``\s`` / ``str.strip`` whitespace set, spelled out as an explicit
-# Java character class (Java's default ``\s`` is ASCII-only and its (?U)
-# variant misses U+001C-001F, so neither is usable verbatim). The 29
-# codepoints below are exactly the set Python matches — enumerated by
-# sweeping re.match(r"\s") over U+0000..U+3000 (there is no Unicode
-# whitespace above U+3000); the sweep is frozen as a test.
-_PY_WS_CLASS = ("[\t\n\x0B\f\r\x1C-\x1F \x85\xA0\u1680"
-                "\u2000-\u200A\u2028\u2029\u202F\u205F\u3000]")
-
-
-def normalize_raw_text_expr(col):
-    """P1 as a pure JVM expression chain (zero Python workers) — byte-identical to :func:`normalize_raw_text` by the
-    equivalence gate (quirk Q9: promotion only behind a corpus +
-    codepoint-sweep proof; tests/test_jvm_textnorm.py).
-
-    Same six ordered rewrites; the line strip/drop/join becomes
-    split → transform(regexp strip) → filter → array_join. Java ``$``
-    may also match before a FINAL line terminator, but every such
-    terminator is itself Python-whitespace here, so the greedy
-    ``cls+$`` consumes through it identically in both engines.
-    """
-    from pyspark.sql import functions as F
-
-    c = F.replace(col, F.lit("\\n"), F.lit("\n"))
-    c = F.regexp_replace(c, "\r\n|\r", "\n")
-    c = F.regexp_replace(c, "\n{3,}", "\n\n")
-    c = F.regexp_replace(c, " {2,}", " ")
-    c = F.replace(c, F.lit("•"), F.lit("\n•"))
-    c = F.regexp_replace(c, f"([.!?]){_PY_WS_CLASS}*([A-Z])", "$1\n$2")
-    lines = F.split(c, "\n", -1)
-    stripped = F.transform(
-        lines,
-        lambda x: F.regexp_replace(
-            x, f"^{_PY_WS_CLASS}+|{_PY_WS_CLASS}+$", ""))
-    return F.array_join(F.filter(stripped, lambda x: x != F.lit("")), "\n")
-
-
 def is_scanned_text(text: str, min_text_length: int = 100) -> bool:
     """Scanned-document predicate (S6): too little text layer.
 

@@ -135,18 +135,17 @@ def run_rehearsal(spark: SparkSession, warc_dir: str, job_dir: str,
     os.makedirs(job_dir, exist_ok=True)
     extract_dir = os.path.join(job_dir, "extract")
 
-    stage_secs: dict = {}
-
     def stage(name: str, deps_dir: str, body) -> str:
-        """Overwrite-write ``body(deps_dir)`` outputs, then commit."""
+        """Overwrite-write ``body(deps_dir)`` outputs, then commit. A
+        body that raises (an injected mid-stage kill) leaves the stage
+        uncommitted, so the restart re-runs it."""
         if not _is_done(job_dir, name):
             t0 = time.time()
             body(deps_dir)
             if crash_after_stage == name:
                 raise InjectedCrash(f"post-{name} pre-commit crash point")
             _commit(job_dir, name)
-            stage_secs[name] = round(time.time() - t0, 1)
-            print(f"stage {name}: {stage_secs[name]}s",
+            print(f"stage {name}: {time.time() - t0:.1f}s",
                   file=sys.stderr, flush=True)
         return os.path.join(job_dir, name)
 
@@ -170,26 +169,18 @@ def run_rehearsal(spark: SparkSession, warc_dir: str, job_dir: str,
          .parquet(pages_path))
     stage("land", warc_dir, mk_land)
 
-    # --- stage 1: pages → extracted rows (batch-resumable). Raw level
-    # takes the hybrid extractor: pre-extracted-text records stay on
-    # the pure-JVM lane, payload records pay the Python kernels.
-    if not _is_done(job_dir, "extract"):
-        from .extract import extract_pages_hybrid
-        t0 = time.time()
-        pages = spark.read.parquet(pages_path)
-        extractor = (extract_pages_hybrid
-                     if tuple(levels) == ("raw",) else None)
-        run_resumable(spark, pages, extract_dir, SNAPSHOT_ID,
-                      num_batches=num_batches, levels=tuple(levels),
+    # --- stage 1: pages → extracted rows (batch-resumable) -------------
+    def mk_extract(deps):
+        run_resumable(spark, spark.read.parquet(deps), extract_dir,
+                      SNAPSHOT_ID, num_batches=num_batches,
+                      levels=tuple(levels),
                       max_batches=crash_after_extract_batches,
-                      extractor=extractor, batch_col="batch")
+                      batch_col="batch")
         if crash_after_extract_batches is not None and len(
                 completed_batches(spark, extract_dir,
                                   SNAPSHOT_ID)) < num_batches:
             raise InjectedCrash("mid-extract crash point")
-        _commit(job_dir, "extract")
-        print(f"stage extract: {time.time() - t0:.1f}s",
-              file=sys.stderr, flush=True)
+    stage("extract", pages_path, mk_extract)
 
     # --- stage 2: documents table ---------------------------------------
     t1 = os.path.join(job_dir, "t1")

@@ -217,134 +217,6 @@ def extract_pages(pages: DataFrame,
     return pages.mapInPandas(run, schema=schema)
 
 
-def extract_pages_text_jvm(pages: DataFrame) -> DataFrame:
-    """Raw-level extraction for rows with NO binary payload — the
-    pre-extracted-text lane — as a pure JVM plan (quirk Q9 promotion,
-    VERDICT r02 #2): detect-empty + P1 normalize + stats evaluate
-    entirely JVM-side (codegen for the scalar chain, interpreted
-    higher-order array ops for the line strip) — no Python worker, no
-    Arrow crossing.
-
-    Byte-identical to ``extract_pages(levels=("raw",))`` on the same
-    rows (gate: tests/test_jvm_textnorm.py — synth corpus + adversarial
-    Unicode + per-codepoint whitespace sweep). At 10^12 rows this is
-    the lane a text-bearing Common-Crawl table takes: the expensive
-    Python kernels run only where bytes actually need parsing — see
-    ``extract_pages_hybrid``.
-
-    Input rows MUST have ``html`` null or empty (caller splits); output
-    matches the raw-level schema of extract_pages.
-    """
-    from ..kernels.textnorm import normalize_raw_text_expr
-
-    has_text = F.col("text").isNotNull() & (F.col("text") != "")
-    norm = normalize_raw_text_expr(F.col("text"))
-    out_text = F.when(has_text, norm)
-    n_lines = F.when(
-        ~has_text, F.lit(0)
-    ).when(out_text == "", F.lit(0)) \
-     .otherwise(F.size(F.split(out_text, "\n", -1)))
-    return pages.select(
-        "url", "warc_ts", "lang",
-        F.when(has_text, F.lit("text")).otherwise(F.lit("empty"))
-         .alias("doctype"),
-        out_text.alias("text"),
-        F.coalesce(F.length(out_text), F.lit(0)).cast("long")
-         .alias("n_chars"),
-        n_lines.cast("long").alias("n_lines"),
-        F.when(~has_text,
-               F.lit("empty payload and no pre-extracted text"))
-         .alias("failure_reason"),
-    )
-
-
-def extract_pages_lines_jvm(pages: DataFrame) -> DataFrame:
-    """Lines-level extraction for payload-less rows as a pure JVM plan
-    (VERDICT r03 #7 — the most common text-row request is "stats +
-    lines", and with this lane it never crosses into Python): the raw
-    lane's P1 normalize plus the P2+P3 line pass and A1 stats as
-    expression twins (kernels/lines.py split_lines_expr /
-    line_stats_exprs).
-
-    Output is the TYPED shape — ``lines array<string>`` plus the three
-    stats columns — not the Python lane's ``lines_json`` envelope:
-    downstream queries consume the typed columns (the JSON envelope is
-    presentation, kept Python-side), and the gate
-    (tests/test_jvm_lines.py) pins value-identity of every line and
-    every stat against ``extract_pages(levels=("raw", "lines"))`` on
-    the same rows. Input rows MUST have ``html`` null/empty."""
-    from ..kernels.lines import line_stats_exprs, split_lines_expr
-    from ..kernels.textnorm import normalize_raw_text_expr
-
-    has_text = F.col("text").isNotNull() & (F.col("text") != "")
-    norm = normalize_raw_text_expr(F.col("text"))
-    out_text = F.when(has_text, norm)
-    lines = F.when(has_text, split_lines_expr(out_text))
-    total, avg, mx = line_stats_exprs(lines)
-    return pages.select(
-        "url", "warc_ts", "lang",
-        F.when(has_text, F.lit("text")).otherwise(F.lit("empty"))
-         .alias("doctype"),
-        out_text.alias("text"),
-        F.coalesce(F.length(out_text), F.lit(0)).cast("long")
-         .alias("n_chars"),
-        F.coalesce(F.when(has_text, total), F.lit(0)).cast("long")
-         .alias("n_lines"),
-        F.when(~has_text,
-               F.lit("empty payload and no pre-extracted text"))
-         .alias("failure_reason"),
-        lines.alias("lines"),
-        F.when(has_text, avg).alias("avg_line_length"),
-        F.when(has_text, mx).alias("max_line_length"),
-    )
-
-
-def extract_pages_hybrid(pages: DataFrame) -> DataFrame:
-    """Raw-level extraction with the JVM fast lane: payload-less rows
-    take ``extract_pages_text_jvm`` (JVM only), payload rows take
-    the fused Python kernel stage; union of the two lanes — row-set
-    identical to ``extract_pages(levels=("raw",))`` by the same gate.
-
-    The split predicate is evaluated at the scan, so each lane reads
-    only its rows (column pruning drops ``html`` entirely from the JVM
-    lane's scan)."""
-    no_payload = F.col("html").isNull() | (F.length("html") == 0)
-    jvm = extract_pages_text_jvm(pages.filter(no_payload))
-    py = extract_pages(pages.filter(~no_payload), levels=("raw",))
-    return jvm.unionByName(py)
-
-
-_LINES_JSON_SCHEMA = ("struct<lines:array<string>, "
-                      "stats:struct<total_lines:bigint, "
-                      "avg_line_length:double, max_line_length:bigint>>")
-
-
-def extract_pages_lines_hybrid(pages: DataFrame) -> DataFrame:
-    """Lines-level extraction with the JVM fast lane: payload-less
-    rows take ``extract_pages_lines_jvm`` (pure JVM), payload rows run
-    the fused Python chain and have their ``lines_json`` lifted to the
-    SAME typed columns via ``from_json`` — one unified
-    (…, lines, avg_line_length, max_line_length) table either way.
-    Row-set identical to the all-Python path by the gate
-    (tests/test_jvm_lines.py); at 10^12 rows the common
-    text-bearing-row request (normalize + lines + stats) never
-    crosses into Python."""
-    no_payload = F.col("html").isNull() | (F.length("html") == 0)
-    jvm = extract_pages_lines_jvm(pages.filter(no_payload))
-    parsed = F.from_json(F.col("lines_json"), _LINES_JSON_SCHEMA)
-    py = (extract_pages(pages.filter(~no_payload),
-                        levels=("raw", "lines"))
-          .withColumn("_p", parsed)
-          .select("url", "warc_ts", "lang", "doctype", "text",
-                  "n_chars", "n_lines", "failure_reason",
-                  F.col("_p.lines").alias("lines"),
-                  F.col("_p.stats.avg_line_length")
-                   .alias("avg_line_length"),
-                  F.col("_p.stats.max_line_length")
-                   .alias("max_line_length")))
-    return jvm.unionByName(py)
-
-
 def repartition_salted(df: DataFrame, num_partitions: int,
                        key: str = "url") -> DataFrame:
     """Skew-defeating repartition: hash the full high-cardinality key

@@ -71,16 +71,11 @@ def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
                   snapshot_id: int, num_batches: int = 8,
                   levels: Sequence[str] = ("raw",),
                   max_batches: Optional[int] = None,
-                  extractor=None,
                   batch_col: Optional[str] = None) -> List[int]:
     """Process ``pages`` in resumable batches; returns batch ids run.
 
     ``max_batches`` limits work for kill/restart testing — a subsequent
     call with the same arguments processes only the remainder.
-    ``extractor`` overrides the per-batch extraction body (a callable
-    DataFrame → DataFrame with the raw-level schema, e.g.
-    ``extract_pages_hybrid`` for the JVM text fast lane); the default
-    is ``extract_pages(batch, levels=levels)``.
     ``batch_col`` names a PRE-MATERIALIZED batch id column (holding
     pmod(xxhash64(url), num_batches), e.g. a partition column of the
     landed pages table): the per-batch filter then targets that column
@@ -110,8 +105,7 @@ def run_resumable(spark: SparkSession, pages: DataFrame, out_dir: str,
     ran: List[int] = []
     for batch_id in todo:
         batch = batched.filter(F.col(bcol) == batch_id).drop(bcol)
-        extracted = (extractor(batch) if extractor is not None
-                     else extract_pages(batch, levels=levels)).cache()
+        extracted = extract_pages(batch, levels=levels).cache()
         try:
             # Row counts ride the WRITE jobs as observe() metrics —
             # two actions per batch total, no separate count jobs

@@ -127,7 +127,8 @@ _SHINGLES_FROM_W = (
 # only their bound elements, so even the fully-inlined expression stays
 # linear. Use this form for any shingle consumer whose plan lets
 # filters/constraints reach the scan (measured 52.7s → ~2s at 500k docs
-# for benchmark_contamination, tools/ab_outliers.py corpus).
+# for benchmark_contamination; corpus and method in BENCH/BASELINE.md,
+# "Round 5: the two r03→r04 bench outliers").
 _SHINGLES_LINEAR_FROM_W = (
     "CASE WHEN size(w) >= 3 THEN"
     " zip_with(slice(w, 1, size(w)-2),"
@@ -1069,8 +1070,9 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str
     built with the SPLIT STAGED (the ``_shingled`` rule — the r04 form
     referenced the inline expression from the hash lambda and paid
     O(words²) split re-evaluation per doc, 24.5s vs 2.3s at 500k docs
-    on the tools/ab_outliers.py corpus, and its computed-column
-    emptiness filter doubled that via predicate-pushdown inlining);
+    on the BENCH/BASELINE.md round-5 outlier A/B corpus, and its
+    computed-column emptiness filter doubled that via predicate-
+    pushdown inlining);
     the benchmark shingle set (tiny by construction) broadcasts into a
     real hash join, and the post-join ``groupBy(doc_id)`` partial-
     aggregates map-side — a doc's shingles are co-located — so the one
@@ -1085,8 +1087,8 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str
     # (shingle count = words-2, and array_distinct keeps non-emptiness):
     # filtering on the COMPUTED shingle column let predicate pushdown
     # substitute the whole hash pipeline into the Filter node and
-    # evaluate it twice per row (measured at 500k docs by
-    # tools/ab_outliers.py); this form pushes one split to the scan.
+    # evaluate it twice per row (measured at 500k docs, BENCH/BASELINE.md
+    # round-5 outlier A/B); this form pushes one split to the scan.
     has_sh = F.expr("size(split(text, ' ')) >= 3")
 
     def hashed(side):
@@ -1116,7 +1118,7 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str
     # The groupBy(doc_id) partial-aggregates map-side (a doc's shingles
     # are co-located in its own row), so the one corpus-keyed exchange
     # carries ≤1 row per doc even at a 100% hit rate (the duplicate-
-    # saturated adversary tools/ab_outliers.py measures).
+    # saturated adversary of the BENCH/BASELINE.md round-5 outlier A/B).
     return (hashed(docs.filter(~is_bench & has_sh))
             .select("doc_id", F.explode("sh").alias("shingle"))
             .join(F.broadcast(bench), "shingle", "left")

@@ -1,0 +1,47 @@
+"""bench.py's round-over-round regression gate compares like with like:
+prior medians taken at another ``sf`` or ``runs_per_query`` are skipped
+with a log line naming both configs, never diffed."""
+
+import importlib.util
+import json
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _bench():
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(ROOT, "bench.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _side(tmp_path, sf, runs):
+    path = tmp_path / "bench_queries.json"
+    path.write_text(json.dumps({"sf": sf, "runs_per_query": runs,
+                                "queries": {"q_slow": 1.0, "q_same": 2.0}}))
+    return str(path)
+
+
+TIMINGS = {"q_slow": 5.0, "q_same": 2.0}  # q_slow: +4s and 5x
+
+
+def test_regression_gate_skips_mismatched_prior_config(tmp_path, capsys):
+    bench = _bench()
+    for sf, runs in (("0.01", 3), ("0.1", 5)):
+        side = _side(tmp_path, sf, runs)
+        assert bench.regression_gate(side, TIMINGS, "0.1", 3) == {}
+        err = capsys.readouterr().err
+        assert "config mismatch" in err
+        assert f"'sf': '{sf}'" in err and f"'runs_per_query': {runs}" in err
+        assert "'sf': '0.1'" in err and "'runs_per_query': 3" in err
+        assert "REGRESSION" not in err
+
+
+def test_regression_gate_flags_like_config_regression(tmp_path, capsys):
+    bench = _bench()
+    side = _side(tmp_path, "0.1", 3)
+    assert bench.regression_gate(side, TIMINGS, "0.1", 3) == {
+        "q_slow": [1.0, 5.0]}
+    assert "REGRESSION vs prev round: q_slow" in capsys.readouterr().err

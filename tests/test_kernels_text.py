@@ -14,9 +14,16 @@ from pdf_extractor_spark.kernels import (
 class TestNormalizeRawText:
     def test_literal_backslash_n(self):
         assert textnorm.normalize_raw_text(r"a\nb") == "a\nb"
+        assert textnorm.normalize_raw_text("a\\nb\\n\\nc") == "a\nb\nc"
 
     def test_crlf_and_cr(self):
         assert textnorm.normalize_raw_text("a\r\nb\rc") == "a\nb\nc"
+        assert textnorm.normalize_raw_text("x\r\ny\rz\r\n\r\rw") == \
+            "x\ny\nz\nw"
+        # literal backslash-n, LF, CRLF and CR in one document
+        assert textnorm.normalize_raw_text(
+            "Multi.\nLine. Input\r\nwith\rall \\n kinds") == \
+            "Multi.\nLine.\nInput\nwith\nall\nkinds"
 
     def test_newline_collapse_and_space_collapse(self):
         assert textnorm.normalize_raw_text("a\n\n\n\nb   c") == "a\nb c"
@@ -26,9 +33,23 @@ class TestNormalizeRawText:
 
     def test_sentence_break_inserts_newline(self):
         assert textnorm.normalize_raw_text("End. Next") == "End.\nNext"
+        # the sentence gap is Python's Unicode \s: NBSP runs and the
+        # FS/GS separators count as whitespace there
+        assert textnorm.normalize_raw_text("End.\xa0\xa0Next") == \
+            "End.\nNext"
+        assert textnorm.normalize_raw_text("End.\x1c\x1dNext") == \
+            "End.\nNext"
 
     def test_empty_lines_dropped(self):
         assert textnorm.normalize_raw_text("a\n   \n\nb") == "a\nb"
+        # NEL and U+3000 are stripped at line edges but are not line
+        # breaks and are not collapsed inside a line
+        assert textnorm.normalize_raw_text("  \x85") == ""
+        assert textnorm.normalize_raw_text("\u3000edge\u3000") == "edge"
+        assert textnorm.normalize_raw_text("a \u3000 b\u3000") == \
+            "a \u3000 b"
+        assert textnorm.normalize_raw_text("separators here\x85ok") == \
+            "separators here\x85ok"
 
     def test_order_sensitivity_bullet_after_space_collapse(self):
         # '  •' → ' •' → '\n•' then strip: pins the reference rewrite order.
@@ -38,9 +59,15 @@ class TestNormalizeRawText:
 class TestLines:
     def test_clean_line_collapses_whitespace(self):
         assert klines.clean_line("  a\t b  ") == "a b"
+        assert klines.clean_line("in\xa0\xa0side") == "in side"
+        assert klines.clean_line("\x1c edge \x1d") == "edge"
 
     def test_split_drops_empties(self):
         assert klines.split_lines("a\n\n  \nb") == ["a", "b"]
+        # NEL is whitespace, not a line break; a U+3000-only line drops
+        assert klines.split_lines("a\x85b\n\u3000\nc") == ["a b", "c"]
+        # a literal backslash-n is text at this level
+        assert klines.split_lines("lit\\nnot split") == ["lit\\nnot split"]
 
     def test_long_line_split_at_sentences(self):
         sent = "Word " * 100 + "end."          # ~505 chars
@@ -48,6 +75,28 @@ class TestLines:
         parts = klines.split_long_line(line)
         assert len(parts) > 1
         assert all(len(p) <= 2100 for p in parts)
+
+        cap = klines.MAX_LINE_LENGTH
+        unit = "This is a sentence that fills some room."
+        # oversize first unit stays whole; the tail packs greedily with
+        # the +1 space allowance (48 units fill 1967 chars)
+        assert klines.split_lines(
+            "z" * (cap + 10) + ". " + (unit + " ") * 60) == [
+            "z" * (cap + 10) + ".", " ".join([unit] * 48),
+            " ".join([unit] * 12)]
+        # exactly at the cap: no re-chunk
+        assert klines.split_lines("q" * cap) == ["q" * cap]
+        # one over the cap with a split point
+        assert klines.split_lines("p" * (cap - 2) + ". tail") == [
+            "p" * (cap - 2) + ".", "tail"]
+        # multibyte sentence run: lengths count code points, not bytes
+        sent = "Ünïcödé sätz hier."
+        assert klines.split_lines(" ".join([sent] * 150)) == [
+            " ".join([sent] * 105), " ".join([sent] * 45)]
+        # punctuation-only and empty-sentence units
+        assert klines.split_lines(("ab!? cd! ! ef. " * 200).strip()) == [
+            "ab!? cd! ! ef. " * 133 + "ab!?",
+            ("cd! ! ef. " + "ab!? cd! ! ef. " * 66).strip()]
 
     def test_stats(self):
         s = klines.line_stats(["ab", "abcd"])

@@ -35,16 +35,12 @@ def main() -> None:
         F.lit(None).cast("timestamp").alias("warc_ts"),
         F.lit(None).cast("binary").alias("html"), "text", "lang")
 
-    from pdf_extractor_spark.pipeline.extract import extract_pages_text_jvm
     from pdf_extractor_spark.queries import curation, simsearch
 
     sections = [
         ("Fused extraction (all 5 levels, ONE MapInPandas, zero Exchange)",
          extract_pages(pages, levels=("raw", "lines", "chapters",
                                       "processed", "markdown"))),
-        ("JVM text lane (raw level, zero Python anywhere in the plan; "
-         "html column pruned out of the scan)",
-         extract_pages_text_jvm(pages)),
         ("Trained-IVF search (broadcast centroids; corpus joins its "
          "trained assignment; windowed top-k)",
          simsearch.q_ann_ivf_topk(spark, SF_DIR)),
