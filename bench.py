@@ -18,6 +18,11 @@ Env knobs:
   SPARK_GRAFT_PROTOCOL_DOCS  corpus size for the official >=60s-window
                           full-chain headline (BASELINE.md protocol;
                           default 1440000; 0 disables the lane)
+Every timed action forces its whole output: the extraction timings
+aggregate ``bit_xor(xxhash64(*cols))`` over every output column and each
+query is timed as a ``noop``-format write. A bare ``count()`` would let
+Catalyst prune the very columns being timed.
+
 All diagnostics go to stderr; stdout carries only the JSON line.
 """
 
@@ -28,9 +33,22 @@ import os
 import sys
 import time
 
+TIMING_MODE = "forced"  # stamped into the side file; the gate compares it
+
 
 def log(msg: str) -> None:
     print(msg, file=sys.stderr, flush=True)
+
+
+def forced_ok(df) -> int:
+    """Materialize every output column of an extraction through one
+    ``bit_xor(xxhash64(*cols))`` aggregate; returns the rows whose
+    ``failure_reason`` is null."""
+    from pyspark.sql import functions as F
+    row = df.agg(F.bit_xor(F.xxhash64(*df.columns)).alias("x"),
+                 F.count_if(F.col("failure_reason").isNull()).alias("ok")
+                 ).collect()[0]
+    return int(row["ok"])
 
 
 def regression_gate(side: str, timings: dict, sf: str,
@@ -42,9 +60,10 @@ def regression_gate(side: str, timings: dict, sf: str,
     A "regression" is a shared query whose new median exceeds the old
     by BOTH >1.0s absolute (the documented cross-session noise bound)
     AND >1.4x relative, so drift can't ship silently; returns the top-5
-    as {name: [prev, new]}. Medians from a different ``sf`` or
-    ``runs_per_query`` are not comparable, so a config mismatch skips
-    the gate with a log line naming both configs.
+    as {name: [prev, new]}. Medians from a different ``sf``,
+    ``runs_per_query`` or ``timing_mode`` (missing in files written
+    before timing was forced) are not comparable, so a config mismatch
+    skips the gate with a log line naming both configs.
     """
     try:
         with open(side) as fh:
@@ -53,8 +72,9 @@ def regression_gate(side: str, timings: dict, sf: str,
         log(f"regression gate skipped (no prior side file): {exc}")
         return {}
     prior_cfg = {"sf": prior.get("sf"),
-                 "runs_per_query": prior.get("runs_per_query")}
-    cfg = {"sf": sf, "runs_per_query": n_runs}
+                 "runs_per_query": prior.get("runs_per_query"),
+                 "timing_mode": prior.get("timing_mode")}
+    cfg = {"sf": sf, "runs_per_query": n_runs, "timing_mode": TIMING_MODE}
     if prior_cfg != cfg:
         log(f"regression gate skipped (config mismatch): prior "
             f"{prior_cfg} vs current {cfg}")
@@ -104,8 +124,7 @@ def main() -> int:
     pages_src = spark.read.parquet(pages_path)
 
     log(f"extraction bench: {n_docs} docs on local[{cpus}]")
-    warm = extract_pages(pages_src.limit(200), levels=("raw",))
-    warm.filter("failure_reason is null").count()  # warm JVM + Arrow path
+    forced_ok(extract_pages(pages_src.limit(200), levels=("raw",)))  # warm
 
     # Median-of-n_runs for BOTH extraction headlines (VERDICT r03 #4: the
     # single-run ~3s window sat inside the box's 2.5× noise band and the
@@ -116,14 +135,12 @@ def main() -> int:
     raw_runs, full_runs = [], []
     for i in range(n_runs):
         t0 = time.time()
-        ok = extract_pages(pages, levels=("raw",)) \
-            .filter("failure_reason is null").count()
+        ok = forced_ok(extract_pages(pages, levels=("raw",)))
         raw_runs.append(time.time() - t0)
         t0 = time.time()
-        ok_full = extract_pages(
+        ok_full = forced_ok(extract_pages(
             pages, levels=("raw", "lines", "chapters", "processed",
-                           "markdown")) \
-            .filter("failure_reason is null").count()
+                           "markdown")))
         full_runs.append(time.time() - t0)
         log(f"extraction run {i + 1}/{n_runs}: raw {raw_runs[-1]:.1f}s "
             f"({ok} ok), full {full_runs[-1]:.1f}s ({ok_full} ok)")
@@ -156,10 +173,9 @@ def main() -> int:
         proto_pages = spark.read.parquet(proto_path)
         proto_pages.count()  # page-cache warm (scan-only, untimed)
         t0 = time.time()
-        proto_ok = extract_pages(
+        proto_ok = forced_ok(extract_pages(
             proto_pages, levels=("raw", "lines", "chapters", "processed",
-                                 "markdown")) \
-            .filter("failure_reason is null").count()
+                                 "markdown")))
         proto_sec = time.time() - t0
         proto = {"docs": proto_docs, "sec": round(proto_sec, 1),
                  "docs_per_sec": round(proto_docs / proto_sec, 1),
@@ -172,15 +188,19 @@ def main() -> int:
     # Median of n_runs per query (VERDICT r02 #9): the first run of the
     # whole suite doubles as the cold pass; each query's runs are
     # consecutive, so the median reflects warm steady-state while the
-    # spread is logged for the honest cold-vs-warm story.
+    # spread is logged for the honest cold-vs-warm story. Each run is a
+    # noop-format write (every column computed, nothing stored); the
+    # row count for the log is taken after the timed runs.
     timings = {}
     for name, fn in qreg.queries().items():
         runs = []
         try:
             for _ in range(n_runs):
                 t0 = time.time()
-                n = fn(spark, sf_dir).count()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite") \
+                    .save()
                 runs.append(round(time.time() - t0, 3))
+            n = fn(spark, sf_dir).count()
             timings[name] = round(statistics.median(runs), 3)
             log(f"query {name}: {n} rows median {timings[name]}s "
                 f"(runs {runs})")
@@ -209,6 +229,8 @@ def main() -> int:
 
     with open(side, "w") as fh:
         json.dump({"sf": sf, "runs_per_query": n_runs,
+                   "timing_mode": TIMING_MODE, "cpus": cpus,
+                   "loadavg": [round(x, 2) for x in os.getloadavg()],
                    "queries": timings}, fh, indent=1, sort_keys=True)
     log(f"per-query medians written to {side}")
     result = {

@@ -10,6 +10,8 @@ Pinned quirks (SURVEY.md §2.11):
 - Q1: the FINAL buffer is processed (clean/table-detect, extending
   ``main_content``) and then **overwritten** with the raw buffer when no
   subchapter is open; a detected trailing table is still appended first.
+  The cleanup therefore survives only inside an open subchapter, so it
+  runs only there; table detection (and the Q12 raise) runs always.
 - Q2: mid-document chapter closes assign the raw buffer directly —
   ``_process_content`` runs only for the trailing buffer.
 - Q3: ``clean_content_line`` deletes the space at alternating lowercase
@@ -140,9 +142,10 @@ def clean_content_line(line: str) -> str:
     return line.strip()
 
 
-def _process_trailing_content(lines: List[str], parse_tables: bool) -> Dict:
-    """``_process_content`` (chapter_processor.py:456-473) for the final
-    buffer: table detect (A3) else per-line P12 cleanup.
+def _trailing_table(lines: List[str], parse_tables: bool) -> Optional[Dict]:
+    """The table half of ``_process_content`` (chapter_processor.py:
+    456-473) for the final buffer: the parsed table when A3 detects one,
+    else None (the caller then applies the per-line P12 cleanup).
 
     ``parse_tables=True`` is the Q12 intent path (the reference would
     crash here on any detected table; see kernels/tables.py docstring).
@@ -157,8 +160,7 @@ def _process_trailing_content(lines: List[str], parse_tables: bool) -> Dict:
                 "detect_table returned True: reference-reachable behavior "
                 "is a crash (quirk Q12)"
             )
-    cleaned = [c for c in (clean_content_line(l) for l in lines) if c]
-    return {"type": "text", "lines": cleaned}
+    return None
 
 
 def segment_chapters(lines: List[str], parse_tables: bool = True,
@@ -205,13 +207,14 @@ def segment_chapters(lines: List[str], parse_tables: bool = True,
                 continue
         buf.append(cleaned_line)
 
-    # Trailing buffer: processed (cleaned / table-elevated) ...
+    # Trailing buffer: processed (table-elevated, else cleaned) ...
     if buf:
-        processed = _process_trailing_content(buf, parse_tables)
-        if processed["type"] == "table":
-            current["content"]["tables"].append(processed)
-        else:
-            current["content"]["main_content"].extend(processed["lines"])
+        table = _trailing_table(buf, parse_tables)
+        if table is not None:
+            current["content"]["tables"].append(table)
+        elif sub is not None:  # Q1 below discards the cleanup otherwise
+            current["content"]["main_content"].extend(
+                c for c in (clean_content_line(l) for l in buf) if c)
 
     # ... then Q1: overwritten with the raw buffer when no subchapter open.
     if sub is not None:

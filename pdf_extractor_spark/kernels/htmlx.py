@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import cached_property
 from html.parser import HTMLParser
 from typing import List, Optional
 
@@ -40,7 +41,10 @@ HEADING_TAGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 MIN_CONTENT_CHARS = 25
 MAX_LINK_DENSITY = 0.33
 
-_WS = re.compile(r"\s+")
+# Same result as ``\s+`` -> " ", but a lone space is not rewritten: a
+# match is a space plus more whitespace, or a whole run that starts with
+# another whitespace character.
+_WS = re.compile(r" \s+|[^\S ]\s*")
 
 
 @dataclass
@@ -52,7 +56,9 @@ class Block:
     heading_level: int = 0
     in_boilerplate_container: bool = False
 
-    @property
+    # Built once: first read in ``_BlockParser._flush``, after the
+    # block's last mutation (the parser moves on to a fresh Block).
+    @cached_property
     def text(self) -> str:
         return _WS.sub(" ", "".join(self.text_parts)).strip()
 

@@ -13,7 +13,10 @@ from typing import Dict, List
 
 MAX_LINE_LENGTH = 2000  # line_processor.py:12
 
-_WS = re.compile(r"\s+")
+# Same result as ``\s+`` -> " ", but a lone space is not rewritten: a
+# match is a space plus more whitespace, or a whole run that starts with
+# another whitespace character.
+_WS = re.compile(r" \s+|[^\S ]\s*")
 _SENT_SPLIT = re.compile(r"([.!?])\s+")
 
 

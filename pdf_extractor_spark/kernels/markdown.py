@@ -19,12 +19,11 @@ _CONTINUATION = re.compile(
     r"^(and|or|but|nor|for|yet|so|the|a|an|in|on|at|to|of|with)\b"
 )
 _CLAUSE_END = re.compile(r"[,;:]$")
-_MULTI_SPACE = re.compile(r" +")
+_MULTI_SPACE = re.compile(r" {2,}")  # same result as " +", no 1:1 rewrites
 _MANY_NL = re.compile(r"\n{3,}")
 _SPACED3 = re.compile(r"\b([A-Za-z])\s+([A-Za-z])\s+([A-Za-z])")
 _DND = re.compile(r"D\s*&\s*D")
 _DUNGEONS = re.compile(r"Dungeons\s*&\s*Dragons")
-_SHORT_GAP = re.compile(r"(\b[a-z]+)\s([a-z])")
 _WS2 = re.compile(r"\s{2,}")
 _ANCHOR_STRIP = re.compile(r"[^\w-]")
 _TRAIL_PAGE = re.compile(r"\.{2,}.*?\d+$")
@@ -33,7 +32,6 @@ _INNER_GAP = re.compile(r"([A-Za-z])\s+([A-Za-z])")
 _CAMEL_BOUNDARY = re.compile(r"([a-z])([A-Z])")
 _SPACE_HYPHEN = re.compile(r"[\s\-]+")
 
-_GAP_FIX_WORDS = ["more", "some", "come", "name", "time", "like", "take"]
 _RUN_TOGETHER_WORDS = [
     "and", "the", "you", "your", "with", "that", "this", "from", "they",
     "have", "what", "were", "when", "will", "whom", "their",
@@ -41,18 +39,13 @@ _RUN_TOGETHER_WORDS = [
 # Precompiled per-word split patterns (application order preserved).
 _RUN_TOGETHER_PATS = [(re.compile(rf"\b{w}([a-z])"), f"{w} \\1")
                       for w in _RUN_TOGETHER_WORDS]
-# Hot-spot prechecks (byte-equivalence argued inline at the use sites,
-# pinned by TestCleanContentFastEquivalence):
-# one alternation scan standing in for all 16 sequential split passes —
-# if it has no match on the incoming line, pass 1 cannot match, leaves
-# the line unchanged, so pass 2 sees the same line, … (induction): all
-# 16 are no-ops and are skipped.
+# Hot-spot precheck (byte-equivalence pinned by
+# TestCleanContentFastEquivalence): one alternation scan standing in for
+# all 16 sequential split passes — if it has no match on the incoming
+# line, pass 1 cannot match, leaves the line unchanged, so pass 2 sees
+# the same line, … (induction): all 16 are no-ops and are skipped.
 _RUN_PRECHECK = re.compile(
     r"\b(?:" + "|".join(_RUN_TOGETHER_WORDS) + r")[a-z]")
-# any applicable short-gap fix needs a 1-2-letter word + space + letter
-# at the same position this restricted pattern matches; no match ⇒ the
-# finditer loop cannot mutate the line.
-_SHORT_GAP12 = re.compile(r"\b[a-z]{1,2}\s[a-z]")
 _WS_ANY = re.compile(r"\s+")
 
 
@@ -91,8 +84,13 @@ def normalize_title(title: str) -> str:
 
 def clean_content_text(text: str) -> str:
     """Per-line cleanup (markdown_converter.py:306-371): cautious
-    spaced-word collapse, D&D fixes, short-prefix gap fixes against a
-    small whitelist, run-together splits after common words.
+    spaced-word collapse, D&D fixes, run-together splits after common
+    words.
+
+    The reference's short-prefix gap fix (join ``<word> <letter>`` when
+    the word has at most 2 letters and the join is one of 7 whitelist
+    words) is omitted: the join has at most 3 letters and every
+    whitelist word has 4, so it never fires.
     """
     if not text or len(text) < 3:
         return text
@@ -111,14 +109,6 @@ def clean_content_text(text: str) -> str:
     if "&" in cur:  # both patterns require a literal ampersand
         cur = _DND.sub("D&D", cur)
         cur = _DUNGEONS.sub("Dungeons & Dragons", cur)
-
-    if _SHORT_GAP12.search(cur):
-        for m in reversed(list(_SHORT_GAP.finditer(cur))):
-            prefix, suffix = m.group(1), m.group(2)
-            if len(prefix) <= 2 and \
-                    (prefix + suffix).lower() in _GAP_FIX_WORDS:
-                start, end = m.span()
-                cur = cur[:start] + prefix + suffix + cur[end:]
 
     if _RUN_PRECHECK.search(cur):
         for pat, repl in _RUN_TOGETHER_PATS:

@@ -65,9 +65,15 @@ def detect_table(lines: List[str], min_rows: int = 5) -> bool:
     """Boolean table predicate (table_processor.py:54-75)."""
     if len(lines) < min_rows:
         return False
-    counts = _pattern_counts(lines)
+    # Same boolean as testing every type against full _pattern_counts,
+    # but all() stops a type at its first short pattern, so a pattern is
+    # counted only while its type is still possible (``feature`` scans
+    # whole sentences and rarely needs counting). No two types share a
+    # pattern, so none is counted twice.
+    stripped = [line.strip() for line in lines]
     for spec in TABLE_TYPES.values():
-        if all(counts[p] >= min_rows / 4 for p in spec["patterns"]):
+        if all(sum(1 for s in stripped if _COMPILED[p].match(s))
+               >= min_rows / 4 for p in spec["patterns"]):
             return True
     return False
 

@@ -31,6 +31,7 @@ the control flow is unchanged.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -64,6 +65,27 @@ def _commit(job_dir: str, stage: str) -> None:
 
 def _is_done(job_dir: str, stage: str) -> bool:
     return os.path.exists(_marker(job_dir, stage))
+
+
+def _pin_job_params(job_dir: str, params: dict) -> None:
+    """Write ``job_params.json`` on a job's first start; on a resume,
+    raise if any value differs. Batch membership, the extract levels and
+    the budget decide what each committed stage holds, so a resume with
+    other values would silently mix two jobs' outputs."""
+    path = os.path.join(job_dir, "job_params.json")
+    if not os.path.exists(path):
+        tmp = path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(params, fh, sort_keys=True)
+        os.replace(tmp, path)
+        return
+    with open(path) as fh:
+        pinned = json.load(fh)
+    changed = [f"{k}: job has {pinned.get(k)!r}, resume asked {v!r}"
+               for k, v in params.items() if pinned.get(k) != v]
+    if changed:
+        raise ValueError(f"resume of {job_dir} with changed job "
+                         f"parameters ({'; '.join(changed)})")
 
 
 def dedup_verdicts_exact_first(spark: SparkSession, docs: DataFrame,
@@ -130,9 +152,13 @@ def run_rehearsal(spark: SparkSession, warc_dir: str, job_dir: str,
     batches then raises InjectedCrash (mid-stage kill);
     ``crash_after_stage="dedup"`` raises right after that stage's
     writes land but BEFORE its commit marker (the worst-case point:
-    the restart must redo the stage idempotently).
+    the restart must redo the stage idempotently). A resume whose
+    ``num_batches``, ``levels`` or ``budget`` differ from the job's
+    first start raises ValueError before any stage runs.
     """
     os.makedirs(job_dir, exist_ok=True)
+    _pin_job_params(job_dir, {"num_batches": num_batches,
+                              "levels": list(levels), "budget": budget})
     extract_dir = os.path.join(job_dir, "extract")
 
     def stage(name: str, deps_dir: str, body) -> str:

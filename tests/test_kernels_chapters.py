@@ -1,9 +1,14 @@
 """Unit tests for the chapter fold (O1) and its pinned quirks Q1-Q3, Q12."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pdf_extractor_spark.kernels import chapters as kch
 from pdf_extractor_spark.kernels import tables as ktab
+from pdf_extractor_spark.kernels.spaced import (collapse_spaced_text,
+                                                has_spaced_text)
+from pdf_extractor_spark.kernels.validator import validate_chapter
 
 
 class TestChapterPredicates:
@@ -127,6 +132,176 @@ class TestSegmentChapters:
     def test_stats(self):
         res = kch.segment_chapters(self.LINES, with_validation=False)
         assert res["stats"]["total_chapters"] == 3
+
+
+def _fold_always_cleans(lines, parse_tables=True, with_validation=True):
+    """The chapter fold as it was before the Q1-discarded trailing
+    cleanup was skipped: the final buffer is always cleaned (or
+    table-elevated) and extended into main_content, then Q1 applies."""
+    def process_trailing_content(lines, parse_tables):
+        if ktab.detect_table(lines):
+            if parse_tables:
+                parsed = ktab.parse_table(lines)
+                if parsed["type"] == "table":
+                    return parsed
+            else:
+                raise TypeError(
+                    "detect_table returned True: reference-reachable "
+                    "behavior is a crash (quirk Q12)"
+                )
+        cleaned = [c for c in (kch.clean_content_line(l) for l in lines)
+                   if c]
+        return {"type": "text", "lines": cleaned}
+
+    chapters = []
+    current = {
+        "number": 0, "title": "Front Matter", "original_line": None,
+        "content": kch._empty_content(),
+    }
+    buf = []
+    sub = None
+
+    for line in lines:
+        cleaned_line = line
+        if has_spaced_text(cleaned_line):
+            cleaned_line = collapse_spaced_text(cleaned_line)
+            if kch.is_chapter_title(cleaned_line):
+                if sub is not None:
+                    sub["lines"] = buf
+                    current["content"]["subchapters"].append(sub)
+                    sub = None
+                else:
+                    current["content"]["main_content"] = buf
+                current["content"]["info"]["line_count"] = len(buf)
+                chapters.append(current)
+                current = kch.extract_chapter_info(cleaned_line)
+                buf = []
+                continue
+            maybe_sub = kch.detect_subchapter(line)
+            if maybe_sub is not None:
+                if sub is not None:
+                    sub["lines"] = buf
+                    current["content"]["subchapters"].append(sub)
+                    buf = []
+                sub = maybe_sub
+                continue
+        buf.append(cleaned_line)
+
+    if buf:
+        processed = process_trailing_content(buf, parse_tables)
+        if processed["type"] == "table":
+            current["content"]["tables"].append(processed)
+        else:
+            current["content"]["main_content"].extend(processed["lines"])
+
+    if sub is not None:
+        sub["lines"] = buf
+        current["content"]["subchapters"].append(sub)
+    else:
+        current["content"]["main_content"] = buf
+    current["content"]["info"]["line_count"] = len(buf)
+    chapters.append(current)
+
+    validation = []
+    if with_validation:
+        for ch in chapters:
+            v = validate_chapter(ch)
+            if any([v["main_content"], v["subchapters"], v["tables"]]):
+                validation.append(v)
+
+    n = len(chapters)
+    total_len = sum(
+        len(c["content"]["main_content"])
+        + sum(len(s["lines"]) for s in c["content"]["subchapters"])
+        for c in chapters
+    )
+    return {
+        "chapters": chapters,
+        "validation": validation,
+        "stats": {
+            "total_chapters": n,
+            "avg_chapter_length": (total_len / n) if n else 0,
+        },
+    }
+
+
+def _both(lines, parse_tables):
+    """(old, new) results of the fold; a raise is compared by type."""
+    out = []
+    for fold in (_fold_always_cleans, kch.segment_chapters):
+        try:
+            out.append(fold(list(lines), parse_tables=parse_tables))
+        except TypeError as exc:
+            out.append(type(exc))
+    return out
+
+
+_FOLD_LINES = [
+    "C h a p t e r 1 : R a c e s", "C h a p t e r 2 : Classes",
+    "C h a p t e r 3",                                  # chapter titles
+    "H i l l D w a r f", "W o o d E l f", "T r a i t s",  # subchapters
+    "Barbarian", "d12", "Strength", "Fighter", "d10",    # table rows
+    "Dexterity & Wisdom", "1st", "+2", "Rage, Unarmored Defense",
+    "the cat sat", "m ore text here", "see D u n g e o n s now",
+    "D & D rules", "Dungeons  &  Dragons", "  padded   line  ",
+    "a b c d e f", "Plain Sentence.", "   ",            # plain lines
+]
+
+
+class TestTrailingCleanupSkip:
+    """segment_chapters cleans the final buffer only when a subchapter
+    is open (Q1 discards the cleanup otherwise); it must agree with the
+    always-cleaning fold on every input, raises included."""
+
+    ENDS_IN_SUBCHAPTER = ["C h a p t e r 1 : R a c e s", "H i l l D w a r f",
+                          "the cat sat", "see D u n g e o n s now"]
+
+    def test_cleaned_lines_survive_in_open_subchapter(self):
+        old, new = _both(self.ENDS_IN_SUBCHAPTER, True)
+        assert new == old
+        final = new["chapters"][-1]["content"]
+        assert final["subchapters"][0]["lines"] == \
+            self.ENDS_IN_SUBCHAPTER[2:]
+        assert final["main_content"] == [
+            kch.clean_content_line(l) for l in self.ENDS_IN_SUBCHAPTER[2:]]
+        assert final["main_content"] != self.ENDS_IN_SUBCHAPTER[2:]
+
+    def test_trailing_table_in_open_subchapter(self):
+        lines = self.ENDS_IN_SUBCHAPTER[:2] + ["Barbarian", "d12",
+                                               "Strength"] * 3
+        old, new = _both(lines, True)
+        assert new == old and new["chapters"][-1]["content"]["tables"]
+        assert _both(lines, False) == [TypeError, TypeError]
+
+    @settings(max_examples=400, deadline=None)
+    @given(st.lists(st.sampled_from(_FOLD_LINES), max_size=30),
+           st.booleans())
+    def test_matches_always_cleaning_fold(self, lines, parse_tables):
+        old, new = _both(lines, parse_tables)
+        assert new == old
+
+
+def _detect_full(lines, min_rows=5):
+    """detect_table over the full per-pattern profile."""
+    if len(lines) < min_rows:
+        return False
+    counts = ktab._pattern_counts(lines)
+    return any(all(counts[p] >= min_rows / 4 for p in spec["patterns"])
+               for spec in ktab.TABLE_TYPES.values())
+
+
+class TestDetectTableLazy:
+    MIX = ["Barbarian", "d12", "d8", "Strength", "Charisma & Wisdom",
+           "1st", "2nd", "+2", "-1", "Rage, Unarmored Defense",
+           "  Fighter  ", "Primal Path", "A plain sentence, with words.",
+           "42", "", "the cat sat."]
+
+    @settings(max_examples=500, deadline=None)
+    @given(st.lists(st.sampled_from(MIX), max_size=24),
+           st.integers(min_value=0, max_value=9))
+    def test_matches_full_profile(self, lines, min_rows):
+        assert ktab.detect_table(lines, min_rows) == \
+            _detect_full(lines, min_rows)
 
 
 class TestTables:

@@ -1,6 +1,8 @@
 """Unit tests for the north-star extraction kernels: doctype, HTML
 boilerplate stripping, PDF layout parsing, envelopes."""
 
+import re
+
 from pdf_extractor_spark.kernels import (
     doctype,
     envelope as kenv,
@@ -73,6 +75,29 @@ class TestHtmlExtraction:
     def test_link_density(self):
         b = htmlx.Block(text_parts=["click here now"], anchor_chars=14)
         assert b.link_density == 1.0
+
+    def test_cached_block_text_matches_fresh_on_golden_html(self):
+        """Block.text is built once, on its first read in _flush; for
+        every HTML golden input it equals a recomputation from the
+        block's final parts."""
+        from pdf_extractor_spark.sources.pages import (build_extra_records,
+                                                       build_pages_records)
+        from tools.make_goldens import (EXTRA_N, EXTRA_SEED, GOLDEN_N,
+                                        GOLDEN_SEED)
+        records = (build_pages_records(GOLDEN_N, GOLDEN_SEED)
+                   + build_extra_records(EXTRA_N, EXTRA_SEED))
+        html = [r for r in records if r["url"].endswith(".html")]
+        assert html
+        n_blocks = 0
+        for r in html:
+            _, blocks = htmlx.parse_blocks(
+                r["html"].decode("utf-8", errors="replace"))
+            for b in blocks:
+                assert "text" in vars(b)  # cached before the parse ended
+                assert b.text == re.sub(r"\s+", " ",
+                                        "".join(b.text_parts)).strip()
+                n_blocks += 1
+        assert n_blocks
 
 
 class TestPdfRoundtrip:

@@ -7,18 +7,36 @@ exceptions — a poison document must become a failure_reason row, never
 a task abort), and determinism.
 """
 
+import re
 import string
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pdf_extractor_spark.kernels import doctype, lines, spaced, textnorm
+from pdf_extractor_spark.kernels import (doctype, htmlx, lines, markdown,
+                                         spaced, textnorm)
 from pdf_extractor_spark.pipeline.extract import extract_document
 
 # text-ish strategy: printable + whitespace + a few unicode letters
 TEXT = st.text(
     alphabet=string.ascii_letters + string.digits + " \t\n.,;:!?•-&é",
     max_size=800)
+
+
+# every \s class member a crawl carries: ASCII controls, the \x1c-\x1f
+# separators, NEL, NBSP, thin space, ideographic space
+WS_TEXT = st.text(alphabet=" \t\n\r\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0"
+                           "\u2009\u3000ab", max_size=60)
+
+
+@settings(max_examples=500, deadline=None)
+@given(WS_TEXT)
+def test_whitespace_collapse_patterns_match_plain_forms(s):
+    r"""The collapse patterns skip lone spaces yet give the plain forms'
+    result: ``\s+`` -> " " and " +" -> " "."""
+    assert lines._WS.sub(" ", s) == re.sub(r"\s+", " ", s)
+    assert htmlx._WS.sub(" ", s) == re.sub(r"\s+", " ", s)
+    assert markdown._MULTI_SPACE.sub(" ", s) == re.sub(r" +", " ", s)
 
 
 @settings(max_examples=150, deadline=None)

@@ -1,5 +1,7 @@
 """Unit tests for text kernels: P1-P5, P13-P18, wordcorr, validator."""
 
+import re
+
 from pdf_extractor_spark.kernels import (
     lines as klines,
     markdown as kmd,
@@ -336,6 +338,10 @@ class TestErrorPatternFastEquivalence:
                     text = pat.sub(repl, text)
         return text
 
+    def test_short_gap_fix_never_fires(self):
+        # a prefix of <= 2 letters plus one letter spells <= 3 letters
+        assert min(len(w) for w in _GAP_FIX_WORDS) > 2 + 1
+
     def test_equivalence_on_adversarial_cases(self):
         for case in self.CASES:
             assert self._fast(case) == self._verbatim(case), case
@@ -367,6 +373,13 @@ class TestErrorPatternFastEquivalence:
             s = "".join(parts)
             assert self._fast(s) == self._verbatim(s)
         check()
+
+
+# The reference's short-gap fix, which clean_content_text omits as a
+# provable no-op (test_short_gap_fix_never_fires); kept here so the
+# verbatim chain below stays the reference's, step for step.
+_SHORT_GAP = re.compile(r"(\b[a-z]+)\s([a-z])")
+_GAP_FIX_WORDS = ["more", "some", "come", "name", "time", "like", "take"]
 
 
 class TestCleanContentFastEquivalence:
@@ -404,15 +417,19 @@ class TestCleanContentFastEquivalence:
                 break
         cur = kmd._DND.sub("D&D", cur)
         cur = kmd._DUNGEONS.sub("Dungeons & Dragons", cur)
-        for m in reversed(list(kmd._SHORT_GAP.finditer(cur))):
+        for m in reversed(list(_SHORT_GAP.finditer(cur))):
             prefix, suffix = m.group(1), m.group(2)
             if len(prefix) <= 2 and \
-                    (prefix + suffix).lower() in kmd._GAP_FIX_WORDS:
+                    (prefix + suffix).lower() in _GAP_FIX_WORDS:
                 start, end = m.span()
                 cur = cur[:start] + prefix + suffix + cur[end:]
         for pat, repl in kmd._RUN_TOGETHER_PATS:
             cur = pat.sub(repl, cur)
         return kmd._WS2.sub(" ", cur).strip()
+
+    def test_short_gap_fix_never_fires(self):
+        # a prefix of <= 2 letters plus one letter spells <= 3 letters
+        assert min(len(w) for w in _GAP_FIX_WORDS) > 2 + 1
 
     def test_equivalence_on_adversarial_cases(self):
         for case in self.CASES:

@@ -140,3 +140,41 @@ class TestRehearsalKillRestart:
         # re-invoking a completed job is a no-op with identical summary
         assert run_rehearsal(spark, warc_dir, job, budget=BUDGET,
                              num_batches=N_BATCHES) == c
+
+
+class TestJobParams:
+    def test_resume_with_changed_params_fails_before_any_stage(
+            self, spark, tmp_path, monkeypatch):
+        """A job's ``num_batches``/``levels``/``budget`` are pinned in
+        job_params.json at its first start; a resume that changes one
+        raises, naming both values, before the first stage reads
+        anything (ADVICE r05 #1)."""
+        import json
+
+        from pdf_extractor_spark.pipeline import compose
+
+        def killed_landing(*_a, **_k):
+            raise InjectedCrash("killed in the first stage")
+        monkeypatch.setattr(compose, "read_warc", killed_landing)
+        job = str(tmp_path / "job")
+        params = dict(budget=BUDGET, num_batches=N_BATCHES, levels=("raw",))
+        with pytest.raises(InjectedCrash):
+            run_rehearsal(spark, "unused", job, **params)
+        with open(os.path.join(job, "job_params.json")) as fh:
+            assert json.load(fh) == {"budget": BUDGET,
+                                     "num_batches": N_BATCHES,
+                                     "levels": ["raw"]}
+
+        for key, new, old_txt, new_txt in (
+                ("num_batches", 8, f"{N_BATCHES}", "8"),
+                ("levels", ("raw", "lines"), "['raw']", "['raw', 'lines']"),
+                ("budget", BUDGET + 1, f"{BUDGET}", f"{BUDGET + 1}")):
+            with pytest.raises(ValueError) as exc:
+                run_rehearsal(spark, "unused", job, **{**params, key: new})
+            msg = str(exc.value)
+            assert f"{key}: job has {old_txt}, resume asked {new_txt}" in msg
+        assert not [f for f in os.listdir(job) if f != "job_params.json"]
+
+        # the same parameters pass the check and reach the first stage
+        with pytest.raises(InjectedCrash):
+            run_rehearsal(spark, "unused", job, **params)
